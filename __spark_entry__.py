@@ -971,8 +971,9 @@ def _stac_valid_split(spark, sf_dir):
     107-125): required id, WGS84 ranges, bbox⇔geometry consistency,
     datetime-vs-range exclusivity, plus a controlled-vocabulary check on
     lang (reference CV validation, cmip6.py:47-67). Returns every doc with
-    its first failure_reason (null = valid)."""
-    from stac_populator_spark.operators.validate import cv_check, split_valid_invalid
+    its first failure_reason (null = valid): the structural reason if
+    there is one, otherwise the lang CV reason — one projection."""
+    from stac_populator_spark.operators.validate import cv_check, tag_failures
 
     d = _t(spark, sf_dir, "documents")
     ts = F.expr("timestampadd(SECOND, doc_id*977, timestamp'2020-01-01 00:00:00')")
@@ -989,12 +990,10 @@ def _stac_valid_split(spark, sf_dir):
         F.col("doc_id"),
         F.col("lang"),
     )
-    valid, dead = split_valid_invalid(items, structural=True)
-    valid_tagged = valid.withColumn(
-        "failure_reason",
-        F.when(cv_check("lang", ("en", "es", "de", "fr", "pt", "ja", "ru")), F.lit("cv_lang")),
+    cv_lang = F.when(cv_check("lang", ("en", "es", "de", "fr", "pt", "ja", "ru")), F.lit("cv_lang"))
+    return tag_failures(items, structural=True).select(
+        "doc_id", F.coalesce("failure_reason", cv_lang).alias("failure_reason")
     )
-    return valid_tagged.unionByName(dead).select("doc_id", "failure_reason")
 
 
 def _stac_flagship(spark, sf_dir):

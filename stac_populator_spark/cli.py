@@ -74,10 +74,9 @@ def cmd_run(args) -> int:
     out["collections"].write.mode("overwrite").parquet(f"{args.out}/collections")
     out["errors"].write.mode("overwrite").parquet(f"{args.out}/errors")
     n = spark.read.parquet(f"{args.out}/items").count()
-    n_err = spark.read.parquet(f"{args.out}/errors").count()
     log.stage("items", n)
     log.stage("collections", spark.read.parquet(f"{args.out}/collections").count())
-    log.failures("errors", spark.read.parquet(f"{args.out}/errors"))
+    n_err = log.failures("errors", spark.read.parquet(f"{args.out}/errors"))["failures"]
     print(f"items written: {n} (+{n_err} dead-lettered) -> {args.out}/items")
     return 0
 

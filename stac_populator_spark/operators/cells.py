@@ -49,18 +49,6 @@ def grid_cell_np(lon, lat, grid_deg: float = GRID_DEG) -> np.ndarray:
 
 
 @pandas_udf(T.LongType())
-def s2_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(s2_cell_id(lon.to_numpy(), lat.to_numpy(), S2_LEVEL))
-
-
-@pandas_udf(T.LongType())
-def hex_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    # cell_hex dispatches icosa (default) vs real Uber-H3 ids when the
-    # environment opted in (SPARK_GRAFT_HEX_BACKEND) and the wheel exists
-    return pd.Series(cell_hex(lon.to_numpy(), lat.to_numpy(), HEX_RES))
-
-
-@pandas_udf(T.LongType())
 def grid_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     return pd.Series(grid_cell_np(lon.to_numpy(), lat.to_numpy()))
 

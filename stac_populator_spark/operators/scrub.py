@@ -116,13 +116,6 @@ def ngram_hashes_from_words(words: F.Column, n: int = 5) -> F.Column:
     )
 
 
-def ngram_hashes(text_col, n: int = 5) -> F.Column:
-    """Single-expression spelling of :func:`ngram_hashes_from_words` —
-    back-compat only. The inline ``split`` re-evaluates per element inside
-    the transform lambda; hot paths must use the two-stage form."""
-    return ngram_hashes_from_words(words_col(text_col), n)
-
-
 def token_hashes_col(words: F.Column) -> F.Column:
     """Per-token xxhash64 array — materialize in its OWN projection before
     :func:`ngram_hashes_from_token_hashes` (same per-element re-evaluation

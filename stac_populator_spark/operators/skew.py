@@ -5,7 +5,9 @@ pages — FIXTURES.md §1). AQE's skew-join splitting covers sort-merge joins;
 for aggregations and cell self-joins we salt explicitly:
 
 - fact side: ``salted = concat(key, '#', pmod(hash(row-unique), S))``
-- dim side:  exploded S ways so every salted key still matches
+  (:func:`salt_column`)
+- dim side:  exploded S ways so every salted key still matches (the
+  hot-cell explode inside ``knn.knn_join_salted``)
 
 Salts derive from deterministic column hashes — never ``rand()`` — so runs
 are reproducible and retried tasks produce identical output (a correctness
@@ -25,21 +27,6 @@ def salt_column(key_col: str, unique_col: str, n_salts: int) -> F.Column:
         F.lit("#"),
         F.pmod(F.xxhash64(F.col(unique_col)), F.lit(n_salts)).cast("string"),
     )
-
-
-def salt_fact(df: DataFrame, key_col: str, unique_col: str, n_salts: int,
-              out_col: str = "salted_key") -> DataFrame:
-    return df.withColumn(out_col, salt_column(key_col, unique_col, n_salts))
-
-
-def explode_dim(df: DataFrame, key_col: str, n_salts: int,
-                out_col: str = "salted_key") -> DataFrame:
-    """Replicate the dim side n_salts ways so each salted fact key matches."""
-    salts = F.sequence(F.lit(0), F.lit(n_salts - 1))
-    return df.withColumn("_salt", F.explode(salts)).withColumn(
-        out_col,
-        F.concat(F.col(key_col).cast("string"), F.lit("#"), F.col("_salt").cast("string")),
-    ).drop("_salt")
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:

@@ -2,10 +2,12 @@
 reference's per-item failure isolation, /root/reference/STACpopulator/
 populators.py:268-274 and error-item dumps populators.py:288-300).
 
-Instead of a try/except per item, validity is a column predicate; invalid
-rows are routed to an errors DataFrame with a ``failure_reason`` column
-(the dead-letter table, K4 in SURVEY.md §2.2), valid rows continue. One
-pass, no Python.
+Instead of a try/except per item, validity is a column predicate. Tag
+once, route by filter: ONE projection adds ``failure_reason`` (the first
+failing rule of an ordered (name, predicate) list, null = valid) and the
+tagged frame is what callers build on — valid rows are its null-reason
+filter, the errors DataFrame (the dead-letter table, K4 in SURVEY.md
+§2.2) its non-null filter. Both read the same plan; no union, no Python.
 """
 
 from __future__ import annotations
@@ -13,10 +15,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def _rules(items: DataFrame, require_datetime: bool, structural: bool = False):
-    """Ordered (name, predicate) validity rules. WGS84 ranges mirror
-    check_wgs84_compliance (collection_update.py:18-40); structural rules
-    mirror the reference's jsonschema/pystac item gate
+
+def _first_failure(rules: list) -> F.Column:
+    """The first failing rule's name over ordered (name, predicate) rules
+    (null = every rule passes), mirroring the reference's single logged
+    error per failed item."""
+    reason = F.lit(None).cast("string")
+    for name, rule in reversed(rules):
+        reason = F.when(rule, F.lit(name)).otherwise(reason)
+    return reason
+
+
+def route(tagged: DataFrame):
+    """(valid, dead_letter) filters of a frame tagged with
+    ``failure_reason``; valid rows drop the column."""
+    reason = F.col("failure_reason")
+    return tagged.filter(reason.isNull()).drop("failure_reason"), tagged.filter(reason.isNotNull())
+
+
+def tag_failures(items: DataFrame, require_datetime: bool = False,
+                 structural: bool = False) -> DataFrame:
+    """``items`` plus ``failure_reason`` — the first failing validity rule
+    (null = valid). WGS84 ranges mirror check_wgs84_compliance
+    (collection_update.py:18-40); ``structural=True`` adds the STAC
+    structural gate (bbox⇔geometry consistency, datetime-vs-range
+    exclusivity), mirroring the reference's jsonschema/pystac item gate
     (extensions/base.py:107-125, populators.py:169-172)."""
     rules = [
         ("missing_id", F.col("id").isNull() | (F.length("id") == 0)),
@@ -59,22 +82,14 @@ def _rules(items: DataFrame, require_datetime: bool, structural: bool = False):
             else F.lit(False)
         )
         rules.append(("datetime_missing", F.col("datetime").isNull() & ~has_start))
-    return rules
+    return items.withColumn("failure_reason", _first_failure(rules))
 
 
 def split_valid_invalid(items: DataFrame, require_datetime: bool = False,
                         structural: bool = False):
-    """Returns (valid, dead_letter). dead_letter carries failure_reason —
-    the first failing rule, mirroring the reference's single logged error
-    per failed item. ``structural=True`` adds the STAC structural gate
-    (bbox⇔geometry consistency, datetime-vs-range exclusivity)."""
-    reason = F.lit(None).cast("string")
-    for name, rule in reversed(_rules(items, require_datetime, structural)):
-        reason = F.when(rule, F.lit(name)).otherwise(reason)
-    with_reason = items.withColumn("failure_reason", reason)
-    valid = with_reason.filter(F.col("failure_reason").isNull()).drop("failure_reason")
-    dead = with_reason.filter(F.col("failure_reason").isNotNull())
-    return valid, dead
+    """Returns (valid, dead_letter): the two filters of
+    :func:`tag_failures`; dead_letter carries failure_reason."""
+    return route(tag_failures(items, require_datetime, structural))
 
 
 _INT_RE = r"^-?\d+$"
@@ -149,19 +164,13 @@ def compile_jsonschema(schema: dict, items: DataFrame) -> list:
 
 def schema_failure_reason(schema: dict, items: DataFrame) -> F.Column:
     """First-violation reason column (null = schema-valid)."""
-    reason = F.lit(None).cast("string")
-    for name, rule in reversed(compile_jsonschema(schema, items)):
-        reason = F.when(rule, F.lit(name)).otherwise(reason)
-    return reason
+    return _first_failure(compile_jsonschema(schema, items))
 
 
 def split_by_schema(items: DataFrame, schema: dict):
     """(valid, dead_letter) driven by a jsonschema-subset document; dead
     rows carry the first failing rule as failure_reason."""
-    with_reason = items.withColumn("failure_reason", schema_failure_reason(schema, items))
-    valid = with_reason.filter(F.col("failure_reason").isNull()).drop("failure_reason")
-    dead = with_reason.filter(F.col("failure_reason").isNotNull())
-    return valid, dead
+    return route(items.withColumn("failure_reason", schema_failure_reason(schema, items)))
 
 
 def cv_check(col: str, vocabulary: tuple | list) -> F.Column:
@@ -171,15 +180,6 @@ def cv_check(col: str, vocabulary: tuple | list) -> F.Column:
     the vocabulary. CVs are small (tens–hundreds of terms) → a literal
     isin, whole-stage codegen, no join."""
     return F.col(col).isNotNull() & ~F.col(col).isin(list(vocabulary))
-
-
-def split_by_cv(items: DataFrame, col: str, vocabulary: tuple | list):
-    """(valid, dead_letter) on a controlled-vocabulary column; dead rows
-    carry failure_reason 'cv_<col>'."""
-    bad = cv_check(col, vocabulary)
-    valid = items.filter(~bad)
-    dead = items.filter(bad).withColumn("failure_reason", F.lit(f"cv_{col}"))
-    return valid, dead
 
 
 def unknown_collection_dead_letter(items: DataFrame, collections: DataFrame,

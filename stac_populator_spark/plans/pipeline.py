@@ -6,13 +6,17 @@
       → pip_join             (broadcast footprint cover; J5)
       → assign_items_to_tiles(arithmetic tile ids; J7)
       → stac_item_json       (STAC-valid Feature per item)
+      → tag_failures         (failure_reason projection; K4)
+      → route                (items / errors = two filters of the tagged frame)
       → collection_extent    (A1/A2 groupBy union)
 
 Spark lifecycle (SURVEY.md §3.1): one declarative DAG — Catalyst prunes
 columns into the parquet scan, the only wide exchange is the collection
 aggregation's final groupBy (map-side partial aggregation first), the PIP
-join is broadcast (no fact shuffle). Stage boundaries are optionally
-snapshot-checkpointed (sources.checkpoint) for kill-resume.
+join is broadcast (no fact shuffle). Items, errors and collections each
+read the extraction once (no union of valid and dead-letter branches).
+Stage boundaries are optionally snapshot-checkpointed (sources.checkpoint)
+for kill-resume.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from ..operators.extract import extract_items
 from ..operators.spatial_join import footprint_cover_df, pip_join
 from ..operators.stac_json import stac_item_json
 from ..operators.tiles import assign_items_to_tiles
+from ..operators.validate import route, tag_failures
 from ..sources.checkpoint import CheckpointedPipeline
 
 
@@ -49,6 +54,12 @@ def build_items(pages: DataFrame, cover: DataFrame, exact: str = "rect",
     return stac_item_json(tiled)
 
 
+def build_tagged(pages: DataFrame, cover: DataFrame, exact: str = "rect") -> DataFrame:
+    """Every item with its failure_reason (null = valid) from ONE
+    extraction pass — the pipeline's checkpointed ``extracted`` stage."""
+    return tag_failures(build_items(pages, cover, exact=exact))
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -66,31 +77,15 @@ def run_pipeline(
     """
     from pyspark.sql import functions as F
 
-    from ..operators.validate import split_valid_invalid
-
     cover = footprint_cover_df(spark, footprints_pdf)
+    cp = CheckpointedPipeline(spark, checkpoint_root) if checkpoint_root else None
+    stage = cp.run_stage if cp else (lambda _name, build: build())
 
-    def build_tagged():
-        # ONE heavy extraction+join pass producing every row with its
-        # failure_reason (null = valid); items/errors are cheap filters of
-        # this stage — never re-extract the corpus for the dead letters
-        valid, dead = split_valid_invalid(build_items(pages, cover, exact=exact))
-        return valid.withColumn("failure_reason", F.lit(None).cast("string")).unionByName(dead)
-
-    if checkpoint_root:
-        cp = CheckpointedPipeline(spark, checkpoint_root)
-        tagged = cp.run_stage("extracted", build_tagged)
-        items = tagged.filter(F.col("failure_reason").isNull()).drop("failure_reason")
-        errors = tagged.filter(F.col("failure_reason").isNotNull())
-        # collection extents aggregate only footprint-matched items; the
-        # null-collection (geometry-less / unmatched) items stay in `items`
-        in_collection = items.filter(F.col("collection_id").isNotNull())
-        collections = cp.run_stage("collections", lambda: collection_extent(in_collection))
-        metrics = cp.stage_metrics()
-    else:
-        tagged = build_tagged()
-        items = tagged.filter(F.col("failure_reason").isNull()).drop("failure_reason")
-        errors = tagged.filter(F.col("failure_reason").isNotNull())
-        collections = collection_extent(items.filter(F.col("collection_id").isNotNull()))
-        metrics = {}
+    tagged = stage("extracted", lambda: build_tagged(pages, cover, exact=exact))
+    items, errors = route(tagged)
+    # collection extents aggregate only footprint-matched items; the
+    # null-collection (geometry-less / unmatched) items stay in `items`
+    in_collection = items.filter(F.col("collection_id").isNotNull())
+    collections = stage("collections", lambda: collection_extent(in_collection))
+    metrics = cp.stage_metrics() if cp else {}
     return {"items": items, "collections": collections, "errors": errors, "metrics": metrics}

@@ -36,21 +36,13 @@ def test_kill_between_stages_then_resume(spark, tmp_path):
     fps = footprints_pdf()[:100]
 
     # "killed" run: only stage 1 commits (simulate by running stage 1 alone,
-    # exactly as run_pipeline builds it)
-    from pyspark.sql import functions as F
-
+    # with the pipeline's own tagging function)
     from stac_populator_spark.operators.spatial_join import footprint_cover_df
-    from stac_populator_spark.operators.validate import split_valid_invalid
-    from stac_populator_spark.plans.pipeline import build_items
+    from stac_populator_spark.plans.pipeline import build_tagged
 
     cp = CheckpointedPipeline(spark, root)
     cover = footprint_cover_df(spark, fps)
-
-    def build_tagged():
-        valid, dead = split_valid_invalid(build_items(pages, cover))
-        return valid.withColumn("failure_reason", F.lit(None).cast("string")).unionByName(dead)
-
-    cp.run_stage("extracted", build_tagged)
+    cp.run_stage("extracted", lambda: build_tagged(pages, cover))
     assert StageManifest(root).completed("extracted") is not None
     assert StageManifest(root).completed("collections") is None
 

@@ -157,9 +157,29 @@ def test_stac_json_valid(spark, pages, fps):
     assert n_nogeo > 0  # ~20% of pages have no geo and must still appear
 
 
+def _out_of_range_pages(spark, n):
+    """Pages whose geo meta is out of WGS84 range: every third page's point
+    moves to lat 95, the next third's meta becomes a box from lon -200."""
+    k = F.regexp_extract("url", r"page(\d+)\.html", 1).cast("long") % 3
+    geo = r'<meta name="geo\.position" content="[^"]*">'
+    html = F.col("html").cast("string")
+    bad = (
+        F.when(k == 0, F.regexp_replace(html, geo, '<meta name="geo.position" content="95.0;10.0">'))
+        .when(k == 1, F.regexp_replace(html, geo, '<meta name="geo.box" content="10;-200;20;5">'))
+        .otherwise(html)
+    )
+    return pages_df(spark, n, partitions=2).withColumn("html", bad.cast("binary"))
+
+
+def _row_set(df) -> list:
+    return sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
+
+
 def test_pipeline_accounts_for_full_corpus(spark, pages, fps):
     # every input page appears exactly once in items ∪ errors (per matched
     # collection for multi-footprint matches, but never silently dropped)
+    from stac_populator_spark.operators.validate import split_valid_invalid
+
     out = run_pipeline(spark, pages, fps)
     urls_in = {r["url"] for r in pages.select("url").collect()}
     urls_items = {r["url"] for r in out["items"].select("url").collect()}
@@ -167,6 +187,22 @@ def test_pipeline_accounts_for_full_corpus(spark, pages, fps):
     assert urls_items | urls_errors == urls_in
     # null-geometry and unmatched items are valid with null collection
     assert out["items"].filter(F.col("collection_id").isNull()).count() > 0
+
+    # a second input that dead-letters: errors carry both WGS84 range
+    # reasons, nothing is dropped, and items/errors are exactly the
+    # valid/dead split of the same built items
+    bad = _out_of_range_pages(spark, 300).cache()
+    out = run_pipeline(spark, bad, fps)
+    reasons = {r["failure_reason"] for r in out["errors"].select("failure_reason").collect()}
+    assert {"lat_out_of_range", "lon_out_of_range"} <= reasons
+    urls_in = {r["url"] for r in bad.select("url").collect()}
+    urls_items = {r["url"] for r in out["items"].select("url").collect()}
+    urls_errors = {r["url"] for r in out["errors"].select("url").collect()}
+    assert urls_items | urls_errors == urls_in
+    valid, dead = split_valid_invalid(build_items(bad, footprint_cover_df(spark, fps)))
+    assert _row_set(out["items"]) == _row_set(valid)
+    assert _row_set(out["errors"]) == _row_set(dead)
+    bad.unpersist()
 
 
 def test_antimeridian_items_exist(items):

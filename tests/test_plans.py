@@ -82,6 +82,23 @@ def test_collection_agg_partial_aggregation(spark, pages_path):
     assert plan.count(" Exchange (") == 1
 
 
+def test_run_pipeline_outputs_extract_once(spark, pages_path):
+    # tag once, route by filter: items, errors and collections are each
+    # ONE read of the extraction (one MapInArrow crossing into the Python
+    # kernel), never a union of valid and dead-letter branches that
+    # re-runs extract → cells → PIP → STAC JSON per branch
+    import re
+
+    from stac_populator_spark.datagen import footprints_pdf
+    from stac_populator_spark.plans.pipeline import run_pipeline
+
+    out = run_pipeline(spark, spark.read.parquet(pages_path), footprints_pdf())
+    for name in ("items", "errors", "collections"):
+        tree = plan_of(out[name]).split("\n\n(1)")[0]  # the operator tree
+        assert len(re.findall(r"MapInArrow \(\d+\)", tree)) == 1, (name, tree)
+        assert not re.search(r"Union \(\d+\)", tree), (name, tree)
+
+
 def test_minhash_signatures_zero_exchange(spark):
     # signatures are pure higher-order array expressions in one codegen
     # projection: no explode, no groupBy, no exchange at all
